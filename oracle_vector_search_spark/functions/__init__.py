@@ -2,6 +2,7 @@
 
 from oracle_vector_search_spark.functions.vector import (  # noqa: F401
     as_double_array,
+    cosine_from_norms,
     cosine_similarity,
     dot,
     euclidean,

@@ -4,8 +4,19 @@ Re-expresses the reference's numeric heart (SURVEY.md §2.7) —
 ``faiss.normalize_L2`` + ``IndexFlatIP`` inner-product scan
 (reference build_faiss_db.py:216-218, app.py:139-143) — as Catalyst
 column expressions. Zero UDFs: every function here compiles to JVM-side
-expressions, stays inside whole-stage codegen, and is oracle-checkable
+expressions (no Python worker, no Arrow hop) and is oracle-checkable
 against DuckDB's ``list_dot_product``.
+
+Cost model: the kernels are built from the higher-order functions
+``zip_with``/``aggregate``/``transform``, which are ``CodegenFallback``
+in Spark — whole-stage codegen wraps them but evaluates them
+interpreted, one lambda call per array element. A d-dim dot product is
+therefore ~2d interpreted lambda evaluations, and a cosine is three of
+them. Scorers that see the same vector in many candidate pairs should
+compute ``l2_norm`` once per vector (in the projection before the
+candidate join) and score with ``cosine_from_norms``: one dot product
+per pair instead of three, and the same doubles as
+``cosine_similarity`` because that is the same expression tree.
 
 Precision policy (SURVEY.md §2.7 M3 / §5.2): inputs are ``ARRAY<FLOAT>``
 on disk; all math is done in DOUBLE (cast once via ``as_double_array``) so
@@ -23,6 +34,7 @@ __all__ = [
     "l2_norm",
     "l2_normalize",
     "cosine_similarity",
+    "cosine_from_norms",
     "euclidean",
 ]
 
@@ -67,7 +79,21 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     """cos(a,b) = a·b / (‖a‖·‖b‖) — normalize-then-inner-product collapsed
     into one expression (matches the oracle's formulation exactly).
     NULL (no-match) for zero vectors rather than an ANSI error."""
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
+    return cosine_from_norms(a, b, l2_norm(a), l2_norm(b))
+
+
+def cosine_from_norms(
+    a: Column | str,
+    b: Column | str,
+    a_norm: Column | str,
+    b_norm: Column | str,
+) -> Column:
+    """``cosine_similarity`` with ‖a‖ and ‖b‖ supplied as columns already
+    computed by ``l2_norm`` — per pair it evaluates one dot product
+    instead of three, with bit-identical results. The candidate scorers
+    project each vector's norm once before their joins and call this per
+    (query, neighbor) pair."""
+    return F.try_divide(dot(a, b), _c(a_norm) * _c(b_norm))
 
 
 def euclidean(a: Column | str, b: Column | str) -> Column:

@@ -26,11 +26,14 @@ Two tiers:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from oracle_vector_search_spark.functions.vector import (
     as_double_array,
-    cosine_similarity,
+    cosine_from_norms,
+    l2_norm,
 )
 
 N_PLANES = 16
@@ -71,19 +74,34 @@ def plane_values(j: int, dims: int) -> list[float]:
     return out
 
 
+@functools.lru_cache(maxsize=None)
+def _planes_literal(dims: int) -> str:
+    """All N_PLANES planes as one Spark SQL ARRAY<ARRAY<DOUBLE>> literal,
+    built once per ``dims`` per process. ``repr`` of a float round-trips
+    exactly and the ``D`` suffix parses it as a DOUBLE, so the literal
+    holds the very doubles ``plane_values`` returns."""
+    rows = (
+        "array(" + ", ".join(f"{x!r}D" for x in plane_values(j, dims)) + ")"
+        for j in range(N_PLANES)
+    )
+    return "array(" + ", ".join(rows) + ")"
+
+
 def signature_bits(vec_col: str, dims: int) -> Column:
     """ARRAY<INT> of N_PLANES sign bits for a (double-array) vector.
-    Planes are constant literals; per-row cost is 16 fused dot products."""
-    bits = []
-    for j in range(N_PLANES):
-        plane = F.array(*[F.lit(x) for x in plane_values(j, dims)])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        bits.append(F.when(dot >= 0, 1).otherwise(0))
-    return F.array(*bits)
+
+    One ``transform`` over the constant plane literal (``_planes_literal``):
+    per row that is 16 dot products of ``dims`` terms, each an
+    interpreted ``zip_with`` + ``aggregate`` (both are CodegenFallback),
+    folded left in array order like ``functions.vector.dot``. Parsing
+    one SQL literal replaces 16×dims driver-side ``F.lit`` calls per
+    signature build, which dominated the planning time of a query
+    batch."""
+    return F.expr(
+        f"transform({_planes_literal(dims)}, p -> if(aggregate("
+        f"zip_with(`{vec_col}`, p, (x, y) -> x * y), 0D, "
+        "(a, x) -> a + x) >= 0, 1, 0))"
+    )
 
 
 def duck_signature_bits(vec_expr: str, dims: int) -> list[str]:
@@ -108,6 +126,23 @@ def band_keys(bits_col: str) -> list[Column]:
             expr = term if expr is None else expr + term
         keys.append(expr.alias(f"band{b}"))
     return keys
+
+
+def _with_norm(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    vec_as: str,
+    norm_as: str,
+    id_as: str | None = None,
+) -> DataFrame:
+    """(id, vector as ARRAY<DOUBLE>, its ``l2_norm``): the projection a
+    candidate scorer reads before its joins, so each vector's norm is
+    computed once rather than once per candidate pair it appears in."""
+    return df.select(
+        F.col(id_col).alias(id_as or id_col),
+        as_double_array(vec_col).alias(vec_as),
+    ).withColumn(norm_as, l2_norm(vec_as))
 
 
 def lsh_bucket_table(
@@ -156,22 +191,30 @@ def lsh_similarity_join(
         .select("left_id", "right_id")
         .distinct()
     )
-    vecs = df.select(F.col(id_col), as_double_array(vec_col).alias("v"))
+    vecs = _with_norm(df, id_col, vec_col, "v", "n")
     return (
         cand.join(
-            vecs.select(F.col(id_col).alias("left_id"), F.col("v").alias("lv")),
+            vecs.select(
+                F.col(id_col).alias("left_id"),
+                F.col("v").alias("lv"),
+                F.col("n").alias("ln"),
+            ),
             "left_id",
         )
         .join(
             vecs.select(
-                F.col(id_col).alias("right_id"), F.col("v").alias("rv")
+                F.col(id_col).alias("right_id"),
+                F.col("v").alias("rv"),
+                F.col("n").alias("rn"),
             ),
             "right_id",
         )
         .select(
             "left_id",
             "right_id",
-            F.round(cosine_similarity("lv", "rv"), 6).alias("score"),
+            F.round(cosine_from_norms("lv", "rv", "ln", "rn"), 6).alias(
+                "score"
+            ),
         )
         .filter(F.col("score") >= threshold)
     )
@@ -214,20 +257,17 @@ def lsh_ann_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    vecs = index_df.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("nv"),
-    )
-    qvecs = query_df.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
-    )
+    vecs = _with_norm(index_df, id_col, vec_col, "nv", "nn", "neighbor_id")
+    qvecs = _with_norm(query_df, id_col, vec_col, "qv", "qn", "query_id")
     scored = (
         cand.join(F.broadcast(qvecs), "query_id")
         .join(vecs, "neighbor_id")
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine_similarity("qv", "nv"), 6).alias("score"),
+            F.round(cosine_from_norms("qv", "nv", "qn", "nn"), 6).alias(
+                "score"
+            ),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -305,23 +345,8 @@ def ivf_assign(
     (operators.index_maint) assigns new batches against the SAME seeds
     the standing index was built with, so batch assignment composes
     with the old table instead of invalidating it."""
-    vecs = df.select(F.col(id_col), as_double_array(vec_col).alias("v"))
-    if seeds is None:
-        seeds = vecs.filter(F.col(id_col) % seed_stride == 0).select(
-            F.col(id_col).alias("seed_id"), F.col("v").alias("sv")
-        )
-    scored = vecs.join(F.broadcast(seeds)).select(
-        F.col(id_col),
-        "seed_id",
-        F.round(cosine_similarity("v", "sv"), 6).alias("seed_score"),
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc("seed_score"), F.asc("seed_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.col(id_col), F.col("seed_id").alias("cluster_id"))
+    return ivf_closure_assign(
+        df, id_col, vec_col, seed_stride, n_assign=1, seeds=seeds
     )
 
 
@@ -344,16 +369,22 @@ def ivf_closure_assign(
     at-rest index grows by at most ``n_assign``x (exactly the measured
     replication factor, not a hidden blowup), which is the right trade
     at 100 TB where probe fan-out multiplies query-time reads but
-    storage is cheap and sequential."""
-    vecs = df.select(F.col(id_col), as_double_array(vec_col).alias("v"))
+    storage is cheap and sequential.
+
+    Norms are computed once per vector and once per seed, not once per
+    (vector, seed) pair."""
+    vecs = _with_norm(df, id_col, vec_col, "v", "vn")
     if seeds is None:
         seeds = vecs.filter(F.col(id_col) % seed_stride == 0).select(
             F.col(id_col).alias("seed_id"), F.col("v").alias("sv")
         )
+    seeds = seeds.select("seed_id", "sv", l2_norm("sv").alias("sn"))
     scored = vecs.join(F.broadcast(seeds)).select(
         F.col(id_col),
         "seed_id",
-        F.round(cosine_similarity("v", "sv"), 6).alias("seed_score"),
+        F.round(cosine_from_norms("v", "sv", "vn", "sn"), 6).alias(
+            "seed_score"
+        ),
     )
     w = Window.partitionBy(id_col).orderBy(
         F.desc("seed_score"), F.asc("seed_id")
@@ -388,22 +419,20 @@ def ivf_ann_topk(
     re-assigning the corpus per query."""
     if assign is None:
         assign = ivf_assign(index_df, id_col, vec_col, seed_stride).persist()
-    vecs = index_df.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double_array(vec_col).alias("nv"),
-    )
-    qvecs = query_df.select(
-        F.col(id_col).alias("query_id"), as_double_array(vec_col).alias("qv")
-    )
-    seeds = index_df.filter(F.col(id_col) % seed_stride == 0).select(
-        F.col(id_col).alias("seed_id"),
-        as_double_array(vec_col).alias("sv"),
+    vecs = _with_norm(index_df, id_col, vec_col, "nv", "nn", "neighbor_id")
+    qvecs = _with_norm(query_df, id_col, vec_col, "qv", "qn", "query_id")
+    seeds = _with_norm(
+        index_df.filter(F.col(id_col) % seed_stride == 0),
+        id_col, vec_col, "sv", "sn", "seed_id",
     )
     qscored = qvecs.join(F.broadcast(seeds)).select(
         "query_id",
         "qv",
+        "qn",
         "seed_id",
-        F.round(cosine_similarity("qv", "sv"), 6).alias("seed_score"),
+        F.round(cosine_from_norms("qv", "sv", "qn", "sn"), 6).alias(
+            "seed_score"
+        ),
     )
     wq = Window.partitionBy("query_id").orderBy(
         F.desc("seed_score"), F.asc("seed_id")
@@ -411,20 +440,20 @@ def ivf_ann_topk(
     probes = (
         qscored.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= n_probe)
-        .select("query_id", "qv", F.col("seed_id").alias("cluster_id"))
+        .select("query_id", "qv", "qn", F.col("seed_id").alias("cluster_id"))
     )
     members = assign.select(
         F.col(id_col).alias("neighbor_id"), "cluster_id"
     )
     cand = (
         probes.join(members, "cluster_id")
-        .select("query_id", "qv", "neighbor_id")
+        .select("query_id", "qv", "qn", "neighbor_id")
         .distinct()
     )
     scored = cand.join(vecs, "neighbor_id").select(
         "query_id",
         "neighbor_id",
-        F.round(cosine_similarity("qv", "nv"), 6).alias("score"),
+        F.round(cosine_from_norms("qv", "nv", "qn", "nn"), 6).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("neighbor_id")

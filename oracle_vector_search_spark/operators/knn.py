@@ -148,6 +148,27 @@ def _batch_topk_rows(S_part, ids_v, top):
     return rows_v, rows_q
 
 
+def _collect_queries(
+    query_df: DataFrame, qid: str, qvec: str, max_queries: int
+) -> list:
+    """The GEMM tiers' driver-side query rows: fetch at most
+    ``max_queries + 1`` rows and refuse the set if the extra row came
+    back. The driver never holds more than the guard allows, and the
+    guard needs no count pass of its own (one Spark job fewer per
+    call)."""
+    # bounded: limit caps this at max_queries + 1 rows
+    q_rows = query_df.select(qid, qvec).limit(max_queries + 1).collect()
+    if len(q_rows) > max_queries:
+        raise ValueError(
+            f"query set has more than max_queries={max_queries} rows; "
+            "a query matrix this large should not be driver-collected — "
+            "use operators.ann.lsh_ann_topk (bucketed candidate join) "
+            "instead, or raise max_queries explicitly if you have the "
+            "driver memory for it"
+        )
+    return q_rows
+
+
 def knn_exact_gemm(
     index_df: DataFrame,
     query_df: DataFrame,
@@ -176,26 +197,17 @@ def knn_exact_gemm(
     import numpy as np
     import pandas as pd
 
-    qid = query_id_col or id_col
-    qvec = query_vec_col or vec_col
-    n_queries = query_df.count()
-    if n_queries == 0:
+    q_rows = _collect_queries(
+        query_df, query_id_col or id_col, query_vec_col or vec_col,
+        max_queries,
+    )
+    if not q_rows:
         # empty query set is a legitimate input at scale (a filter that
         # matched nothing) — degrade to an empty result with the tier's
         # contract schema instead of raising (F5 discipline)
         return query_df.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, score double, rank int"
         )
-    if n_queries > max_queries:
-        raise ValueError(
-            f"query set has {n_queries} rows > max_queries={max_queries}; "
-            "a query matrix this large should not be driver-collected — "
-            "use operators.ann.lsh_ann_topk (bucketed candidate join) "
-            "instead, or raise max_queries explicitly if you have the "
-            "driver memory for it"
-        )
-    # bounded: the max_queries guard above caps this at 65,536 rows
-    q_rows = query_df.select(qid, qvec).collect()
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     Q = np.array([r[1] for r in q_rows], dtype=np.float64)
     q_norms = np.linalg.norm(Q, axis=1, keepdims=True)
@@ -356,16 +368,7 @@ def knn_exact_gemm_int8(
 
     qid = query_id_col or id_col
     qvec = query_vec_col or vec_col
-    # guard BEFORE materializing (the old post-collect check would
-    # already have paid the driver memory it was refusing)
-    n_queries = query_df.count()
-    if n_queries > max_queries:
-        raise ValueError(
-            f"query set has {n_queries} rows > max_queries={max_queries}; "
-            "use operators.ann for huge query sets"
-        )
-    # bounded: the max_queries guard above caps this at 65,536 rows
-    q_rows = query_df.select(qid, qvec).collect()
+    q_rows = _collect_queries(query_df, qid, qvec, max_queries)
     if not q_rows:
         # same empty-input contract as knn_exact_gemm above
         return query_df.sparkSession.createDataFrame(

@@ -4,12 +4,20 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from oracle_vector_search_spark.functions.vector import (
+    as_double_array,
+    cosine_similarity,
+)
 from oracle_vector_search_spark.io import load_table
 from oracle_vector_search_spark.operators.ann import (
+    N_BANDS,
+    N_PLANES,
+    ROWS_PER_BAND,
     lsh_ann_topk,
     lsh_bucket_table,
     lsh_similarity_join,
     mllib_brp_lsh_join,
+    plane_values,
 )
 from oracle_vector_search_spark.operators.knn import knn_exact, similarity_join
 
@@ -57,6 +65,94 @@ def test_bucket_table_shape(spark, sf_dir):
         F.min("bucket").alias("lo"), F.max("bucket").alias("hi")
     ).first()
     assert 0 <= rng["lo"] and rng["hi"] <= 15  # 4-bit bucket keys
+
+
+def _with_zero_vector(spark, emb):
+    """``emb`` plus one all-zero vector (every plane dot product is 0)."""
+    zero_id = emb.agg(F.max("vec_id")).first()[0] + 1
+    zero = spark.createDataFrame(
+        [(zero_id, [0.0] * DIMS, 0)], emb.schema
+    )
+    return emb.unionByName(zero), zero_id
+
+
+def test_bucket_table_matches_python_reference(spark, sf_dir):
+    """Signatures equal a driver-side reference built from the same
+    ``plane_values`` with a strict left fold ``a = a + x * y`` and
+    ``>= 0`` — so the SQL plane literal holds exactly those doubles and
+    the Spark fold accumulates in the same order."""
+    emb, zero_id = _with_zero_vector(
+        spark, load_table(spark, sf_dir, "embeddings")
+    )
+    planes = [plane_values(j, DIMS) for j in range(N_PLANES)]
+
+    def buckets(vec):
+        bits = []
+        for plane in planes:
+            a = 0.0
+            for x, y in zip(vec, plane):
+                a = a + x * y
+            bits.append(1 if a >= 0 else 0)
+        return [
+            sum(bits[b * ROWS_PER_BAND + r] << r for r in range(ROWS_PER_BAND))
+            for b in range(N_BANDS)
+        ]
+
+    expected = {
+        (r["vec_id"], band, bucket)
+        for r in emb.collect()
+        for band, bucket in enumerate(buckets(r["embedding"]))
+    }
+    got = {
+        (r["vec_id"], r["band"], r["bucket"])
+        for r in lsh_bucket_table(emb, dims=DIMS).collect()
+    }
+    assert got == expected
+    assert {(b, k) for i, b, k in got if i == zero_id} == {
+        (b, 2**ROWS_PER_BAND - 1) for b in range(N_BANDS)
+    }
+
+
+def test_lsh_topk_query_buckets_and_exact_scores(spark, sf_dir):
+    """Passing the query bucket table changes nothing, and every score
+    is exactly ``round(cosine_similarity, 6)`` of the pair — the
+    once-per-vector norms give the same doubles as the per-pair
+    kernel."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 20)
+    rows = lsh_ann_topk(emb, q, k=5, dims=DIMS).collect()
+    passed = lsh_ann_topk(
+        emb, q, k=5, dims=DIMS, query_buckets=lsh_bucket_table(q, dims=DIMS)
+    ).collect()
+    assert rows and sorted(rows) == sorted(passed)
+
+    pairs = spark.createDataFrame(
+        [(r["query_id"], r["neighbor_id"]) for r in rows],
+        "query_id long, neighbor_id long",
+    )
+    vec = emb.select("vec_id", as_double_array("embedding").alias("v"))
+    scored = (
+        pairs.join(
+            vec.withColumnRenamed("vec_id", "query_id")
+            .withColumnRenamed("v", "qv"),
+            "query_id",
+        )
+        .join(
+            vec.withColumnRenamed("vec_id", "neighbor_id")
+            .withColumnRenamed("v", "nv"),
+            "neighbor_id",
+        )
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine_similarity("qv", "nv"), 6).alias("s"),
+        )
+    )
+    exact = {
+        (r["query_id"], r["neighbor_id"]): r["s"] for r in scored.collect()
+    }
+    for r in rows:
+        assert r["score"] == exact[(r["query_id"], r["neighbor_id"])], r
 
 
 def test_mllib_brp_lsh_matches_cosine_ordering(spark, sf_dir):

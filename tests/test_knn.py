@@ -81,6 +81,21 @@ def test_gemm_guards_large_query_sets(spark, sf_dir):
         knn_exact_gemm(emb, q, k=5, max_queries=3)
 
 
+def test_gemm_guard_boundary_is_max_queries(spark, sf_dir):
+    """Exactly ``max_queries`` queries pass both GEMM tiers; one more
+    raises — the bounded collect fetches max_queries + 1 rows."""
+    import pytest
+
+    from oracle_vector_search_spark.operators.knn import knn_exact_gemm_int8
+
+    emb, q = _topk_frames(spark, sf_dir)
+    n = q.count()
+    for tier in (knn_exact_gemm, knn_exact_gemm_int8):
+        assert len(tier(emb, q, k=5, max_queries=n).collect()) == n * 5
+        with pytest.raises(ValueError, match="max_queries"):
+            tier(emb, q, k=5, max_queries=n - 1)
+
+
 def test_gemm_tie_break_survives_batch_boundary(spark):
     # many index vectors identical up to < 1e-6 — scores tie only AFTER
     # rounding; both tiers must keep the lowest neighbor_ids, even when
